@@ -5,8 +5,9 @@ blocked Bloom filter library, see /root/reference) as mergeable,
 partition-parallel sketches built with vectorized pandas/Arrow UDFs on top of
 the public PySpark DataFrame API:
 
-- ``sketches``   — pure-numpy sketch cores: blocked Bloom, HyperLogLog,
+- ``sketches``   — numpy sketch cores: blocked Bloom, HyperLogLog,
                    count-min, KLL quantiles. build → merge → query → (de)serialize.
+                   Bloom insert/probe run a fused C kernel, numpy as fallback.
 - ``operators``  — Spark-side build (mapInPandas partials + associative merge),
                    probe (broadcast + pandas_udf), checkpoint/resume, salting.
 - ``sources``    — testdata loaders, deterministic token-table derivation and

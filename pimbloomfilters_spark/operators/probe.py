@@ -20,8 +20,11 @@ the deserialized sketch keyed by a driver-assigned token.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import hashlib
 import os
+import shutil
 import tempfile
 
 import numpy as np
@@ -39,6 +42,16 @@ _WORKER_CACHE: dict[str, Sketch] = {}
 _SHIPPED: set[tuple[str, str]] = set()
 
 
+@functools.cache
+def _ship_dir() -> str:
+    """This process's private (mkdtemp, 0700) directory for shipped files:
+    no other user can plant or swap a file in it, unlike a predictable
+    path in the shared temp dir."""
+    d = tempfile.mkdtemp(prefix="pbf_ship_")
+    atexit.register(shutil.rmtree, d, True)
+    return d
+
+
 def ship_sketch(spark, sketch: Sketch) -> str:
     """Register the sketch bytes with ``sc.addFile`` under a content-hash
     name; returns the basename workers resolve via SparkFiles. Mutating a
@@ -48,14 +61,13 @@ def ship_sketch(spark, sketch: Sketch) -> str:
     key = (spark.sparkContext.applicationId, name)
     if key in _SHIPPED:
         return name
-    path = os.path.join(tempfile.gettempdir(), name)
-    if not os.path.exists(path):
-        # atomic publish: another process writing the same content races
-        # benignly; a partial write is never visible under the final name
-        tmp = path + f".tmp{os.getpid()}"
-        with open(tmp, "wb") as f:
-            f.write(raw)
-        os.replace(tmp, path)
+    # always written, never trusted because it exists; published atomically
+    # so a partial write is never visible under the final name
+    fd, tmp = tempfile.mkstemp(dir=_ship_dir())
+    with os.fdopen(fd, "wb") as f:
+        f.write(raw)
+    path = os.path.join(_ship_dir(), name)
+    os.replace(tmp, path)
     spark.sparkContext.addFile(path)
     _SHIPPED.add(key)
     return name

@@ -36,7 +36,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import BlockedBloomFilter
-from ..sketches.bloom import BLOCK_BITS, bloom_positions, scatter_or_bits
+from ..sketches.bloom import (
+    BLOCK_BITS, contains_slots, insert_slots, shard_counts, slot_words)
 from .build import flatten_arrow
 
 SHARD_SCHEMA = "shard int, sketch binary, n_values long"
@@ -96,37 +97,35 @@ def build_bloom_shards(
         n_partitions = max(1, min(
             n_shards, df.sparkSession.sparkContext.defaultParallelism))
     shard_bits = int(math.log2(n_shards))
-    shard_size_bits = m_bits // n_shards
 
     is_array = str(df.schema[col].dataType).lower().startswith("array")
 
     def _build(batches: Iterable[pa.RecordBatch]) -> Iterable[pa.RecordBatch]:
-        buf: dict[int, np.ndarray] = {}
-        counts: dict[int, int] = {}
+        # one words row per shard this task owns, found as keys arrive
+        slot_of = np.full(n_shards, -1, dtype=np.int32)
+        words = np.zeros((0, slot_words(size2, n_shards)), dtype=np.uint64)
+        counts = np.zeros(n_shards, dtype=np.int64)
         for b in batches:
             values = flatten_arrow(b.column(0))
             if values.size == 0:
                 continue
-            pos = bloom_positions(values, size2, nb_hash, seed, block_bits)
-            shards = (pos // np.uint64(shard_size_bits)).astype(np.int64)
-            order = np.argsort(shards, kind="stable")
-            pos, shards = pos[order], shards[order]
-            bounds = np.r_[0, np.flatnonzero(np.diff(shards)) + 1, len(shards)]
-            for i in range(len(bounds) - 1):
-                s = int(shards[bounds[i]])
-                words = buf.get(s)
-                if words is None:
-                    words = buf[s] = np.zeros(shard_size_bits // 64, dtype=np.uint64)
-                    counts[s] = 0
-                scatter_or_bits(words, pos[bounds[i]:bounds[i + 1]],
-                                pos_offset=s * shard_size_bits)
-                counts[s] += (bounds[i + 1] - bounds[i]) // nb_hash
-        if buf:
+            batch_counts = shard_counts(values, seed, n_shards)
+            new = np.flatnonzero((batch_counts > 0) & (slot_of < 0))
+            if new.size:
+                slot_of[new] = np.arange(len(words), len(words) + new.size)
+                words = np.concatenate([words, np.zeros(
+                    (new.size, words.shape[1]), dtype=np.uint64)])
+            counts += batch_counts
+            insert_slots(words, slot_of, values, size2, nb_hash, seed,
+                         block_bits)
+        owned = np.flatnonzero(slot_of >= 0)
+        if owned.size:
             yield pa.RecordBatch.from_arrays(
                 [
-                    pa.array(list(buf.keys()), type=pa.int32()),
-                    pa.array([w.tobytes() for w in buf.values()], type=pa.binary()),
-                    pa.array([counts[s] for s in buf.keys()], type=pa.int64()),
+                    pa.array(owned, type=pa.int32()),
+                    pa.array([words[slot_of[s]].tobytes() for s in owned],
+                             type=pa.binary()),
+                    pa.array(counts[owned], type=pa.int64()),
                 ],
                 names=["shard", "sketch", "n_values"],
             )
@@ -193,9 +192,7 @@ def probe_bloom_distributed(
     ``passthrough`` columns of ``probes`` ride along unchanged (row-aligned),
     e.g. (doc_id, pos) when probing exploded token arrays."""
     _check_routable_seed(seed)
-    m_bits = 1 << size2
     shard_bits = int(math.log2(n_shards))
-    shard_size_bits = m_bits // n_shards
     passthrough = tuple(passthrough)
 
     # cast to long BEFORE hashing: JVM xxhash64 of an INT column hashes 4
@@ -219,13 +216,10 @@ def probe_bloom_distributed(
             words = words.copy()
             for blob in right["sketch"].iloc[1:]:
                 words |= np.frombuffer(blob, dtype=np.uint64)
-        base = int(right["shard"].iloc[0]) * shard_size_bits
-        pos = bloom_positions(vals, size2, nb_hash, seed, block_bits)
-        pos = pos - np.uint64(base)
-        w = (pos >> np.uint64(6)).astype(np.int64)
-        bits = np.uint64(1) << (pos & np.uint64(63))
-        hit = (words[w] & bits) != 0
-        out[out_col] = hit.reshape(-1, nb_hash).all(axis=1)
+        slot_of = np.full(n_shards, -1, dtype=np.int32)
+        slot_of[int(right["shard"].iloc[0])] = 0
+        out[out_col] = contains_slots(words.reshape(1, -1), slot_of, vals,
+                                      size2, nb_hash, seed, block_bits)
         return out
 
     dtypes = dict(probes.dtypes)

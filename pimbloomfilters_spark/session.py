@@ -14,6 +14,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+_MAX_DRIVER_MEM_MB = 32 * 1024
+
+
+def _physical_memory_mb() -> int:
+    """Physical RAM of this host in MiB (``MemTotal`` where /proc exists)."""
+    try:
+        with open("/proc/meminfo") as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    return int(line.split()[1]) // 1024
+    except OSError:
+        pass
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` unless ``SPARK_GRAFT_DRIVER_MEM`` overrides:
+    min(32g, half of physical RAM). A fixed 32g let the local-mode JVM
+    grow until the kernel OOM-killed it on a 15 GB host."""
+    return f"{min(_MAX_DRIVER_MEM_MB, _physical_memory_mb() // 2)}m"
+
 
 def get_spark(app_name: str = "pimbloomfilters-spark", cpus: int | str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -37,7 +58,8 @@ def get_spark(app_name: str = "pimbloomfilters-spark", cpus: int | str | None = 
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 os.environ.get("SPARK_GRAFT_ARROW_BATCH", "65536"))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -21,9 +21,16 @@ Index derivation is xxhash-family double hashing (north rule): the block comes
 from h1's high bits, the k in-block offsets from ``(h1 + i*h2) mod block_bits``
 — replacing the reference's 10-seed hash table (``src/bloom_filter.hpp:271-299``).
 
-All bulk paths are numpy-vectorized: positions are deduped+sorted once per
-batch and OR-folded per 64-bit word with ``np.bitwise_or.reduceat`` (no Python
-loop over items).
+Bulk insert and probe run a fused native kernel (``bloom_kernel.c``, loaded
+by ``_native``): per key it hashes, finds the block and sets or tests the k
+bits in one pass, with no position matrix. The numpy functions here
+(``bloom_positions`` + ``scatter_or_bits`` and the ``*_numpy`` slot paths) are
+the test oracle and the fallback on hosts where the kernel cannot be built;
+the two are byte-identical.
+
+Both paths write a 2-D ``(n_slots, slot_words)`` word buffer through a
+shard->slot table: a plain filter is one slot holding every shard, a
+sharded-build task holds one row per shard it owns.
 """
 
 from __future__ import annotations
@@ -33,10 +40,17 @@ from typing import Any
 
 import numpy as np
 
-from ..hashing import DEFAULT_SEED, double_hashes
+from ..hashing import DEFAULT_SEED, double_hashes, xxh64_u64
+from ._native import kernel
 from .base import Sketch, register
 
 BLOCK_BITS = 4096  # = 512 bytes, the DPU variant's block size
+# numpy paths chunk so the k-wide position matrix stays cache-sized no
+# matter how many values one Arrow batch flattens to (a 65k-row batch of
+# 54-token arrays is 3.5M values -> 28M positions -> ~0.7 GB transients
+# without chunking; measured ~2x slower)
+_CHUNK = 1 << 19
+_ONE_SLOT = np.zeros(1, dtype=np.int32)  # plain filter: shard 0 -> row 0
 
 
 def bloom_positions(values: np.ndarray, size2: int, nb_hash: int, seed: int,
@@ -67,15 +81,156 @@ def bloom_positions(values: np.ndarray, size2: int, nb_hash: int, seed: int,
 
 
 def scatter_or_bits(words: np.ndarray, pos: np.ndarray, pos_offset: int = 0) -> None:
-    """OR the given bit positions into a uint64 word array. ``bitwise_or.at``
-    handles duplicate indexes correctly and measured ~1.7x faster than a
-    sort/unique + reduceat scheme (the sort of n*k positions was the single
-    hottest step of the build at 10M-key scale)."""
+    """OR the given bit positions into a uint64 word array — the numpy
+    oracle's scatter stage (the native kernel fuses it with the hashing).
+    ``bitwise_or.at`` handles duplicate indexes correctly and measured ~1.7x
+    faster than a sort/unique + reduceat scheme."""
     if pos_offset:
         pos = pos - np.uint64(pos_offset)
     w = (pos >> np.uint64(6)).astype(np.int64)
     bits = np.uint64(1) << (pos & np.uint64(63))
     np.bitwise_or.at(words, w, bits)
+
+
+def slot_words(size2: int, n_shards: int) -> int:
+    """uint64 words in one shard's row: m / n_shards bits, at least one word."""
+    return max(1, (1 << size2) // n_shards // 64)
+
+
+def _keys_u64(values) -> np.ndarray:
+    """Keys as contiguous uint64 — the cast ``double_hashes`` applies;
+    int64 (the common case) is reinterpreted without a copy."""
+    a = np.asarray(values)
+    if a.dtype == np.int64:
+        return np.ascontiguousarray(a).view(np.uint64).reshape(-1)
+    return np.ascontiguousarray(a, dtype=np.uint64).reshape(-1)
+
+
+def _geometry(words: np.ndarray, slot_of: np.ndarray, size2: int,
+              block_bits: int) -> tuple[int, int, int]:
+    """(block_log2, nblock_log2, shard_bits), after checking that every
+    slot names a row of ``words`` and every row spans one shard — so no key
+    can address a word outside the buffer."""
+    n_shards = slot_of.size
+    block_log2 = min(block_bits, 1 << size2).bit_length() - 1
+    shard_bits = n_shards.bit_length() - 1
+    if (words.dtype != np.uint64 or words.ndim != 2
+            or not words.flags.c_contiguous):
+        raise ValueError("words must be a C-contiguous 2-D uint64 array")
+    if (slot_of.dtype != np.int32 or slot_of.ndim != 1 or n_shards < 1
+            or n_shards & (n_shards - 1) or shard_bits > size2 - block_log2):
+        raise ValueError("slot_of must be int32 over a power-of-two number "
+                         "of shards, at most one per block")
+    if words.shape[1] != slot_words(size2, n_shards) or \
+            int(slot_of.max()) >= words.shape[0]:
+        raise ValueError(f"words shape {words.shape} does not fit "
+                         f"{n_shards} shards at size2={size2} and "
+                         f"{int(slot_of.max()) + 1} slots")
+    return block_log2, size2 - block_log2, shard_bits
+
+
+def _unrouted(bad: int) -> None:
+    if bad:
+        raise ValueError(f"{bad} keys belong to shards with no slot")
+
+
+def _slot_positions(words, slot_of, keys, size2, nb_hash, seed, block_bits):
+    """(n*k,) bit positions into ``words`` flattened: each global position
+    moved into its shard's row."""
+    pos = bloom_positions(keys, size2, nb_hash, seed, block_bits)
+    if slot_of.size == 1 and slot_of[0] == 0:
+        return pos
+    shard_log2 = size2 - (slot_of.size.bit_length() - 1)
+    slot = slot_of[(pos >> np.uint64(shard_log2)).astype(np.intp)]
+    _unrouted(int((slot[::nb_hash] < 0).sum()))
+    return (slot.astype(np.uint64) * np.uint64(words.shape[1] * 64)
+            + (pos & np.uint64((1 << shard_log2) - 1)))
+
+
+def insert_slots_numpy(words, slot_of, values, size2, nb_hash, seed,
+                       block_bits) -> None:
+    """numpy oracle/fallback of ``insert_slots``."""
+    _geometry(words, slot_of, size2, block_bits)
+    keys = _keys_u64(values)
+    flat = words.reshape(-1)
+    for lo in range(0, keys.size, _CHUNK):
+        scatter_or_bits(flat, _slot_positions(
+            words, slot_of, keys[lo:lo + _CHUNK], size2, nb_hash, seed,
+            block_bits))
+
+
+def contains_slots_numpy(words, slot_of, values, size2, nb_hash, seed,
+                         block_bits) -> np.ndarray:
+    """numpy oracle/fallback of ``contains_slots``."""
+    _geometry(words, slot_of, size2, block_bits)
+    keys = _keys_u64(values)
+    flat = words.reshape(-1)
+    out = np.empty(keys.size, dtype=bool)
+    for lo in range(0, keys.size, _CHUNK):
+        chunk = keys[lo:lo + _CHUNK]
+        pos = _slot_positions(words, slot_of, chunk, size2, nb_hash, seed,
+                              block_bits)
+        hit = (flat[(pos >> np.uint64(6)).astype(np.intp)]
+               & (np.uint64(1) << (pos & np.uint64(63)))) != 0
+        out[lo:lo + chunk.size] = hit.reshape(-1, nb_hash).all(axis=1)
+    return out
+
+
+def shard_counts_numpy(values, seed: int, n_shards: int) -> np.ndarray:
+    """numpy oracle/fallback of ``shard_counts``."""
+    keys = _keys_u64(values)
+    shard_bits = n_shards.bit_length() - 1
+    if not shard_bits:
+        return np.array([keys.size], dtype=np.int64)
+    shard = xxh64_u64(keys, seed) >> np.uint64(64 - shard_bits)
+    return np.bincount(shard.astype(np.intp), minlength=n_shards)
+
+
+def insert_slots(words: np.ndarray, slot_of: np.ndarray, values, size2: int,
+                 nb_hash: int, seed: int, block_bits: int) -> None:
+    """OR each key's k bits into the row ``slot_of[shard]`` of ``words``
+    (``(n_slots, slot_words(size2, len(slot_of)))`` uint64; shard = top
+    log2(len(slot_of)) bits of h1). Raises if a key's shard has no slot."""
+    lib = kernel()
+    if lib is None:
+        return insert_slots_numpy(words, slot_of, values, size2, nb_hash,
+                                  seed, block_bits)
+    geo = _geometry(words, slot_of, size2, block_bits)
+    keys = _keys_u64(values)
+    _unrouted(lib.pbf_insert(keys, keys.size, seed, nb_hash, *geo, slot_of,
+                             words, words.shape[1]))
+
+
+def contains_slots(words: np.ndarray, slot_of: np.ndarray, values,
+                   size2: int, nb_hash: int, seed: int,
+                   block_bits: int) -> np.ndarray:
+    """Order-preserving membership of each key against ``words`` laid out
+    as in ``insert_slots``. Raises if a key's shard has no slot."""
+    lib = kernel()
+    if lib is None:
+        return contains_slots_numpy(words, slot_of, values, size2, nb_hash,
+                                    seed, block_bits)
+    geo = _geometry(words, slot_of, size2, block_bits)
+    keys = _keys_u64(values)
+    out = np.empty(keys.size, dtype=bool)
+    _unrouted(lib.pbf_contains(keys, keys.size, seed, nb_hash, *geo, slot_of,
+                               words, words.shape[1], out))
+    return out
+
+
+def shard_counts(values, seed: int, n_shards: int) -> np.ndarray:
+    """int64[n_shards]: keys per shard (shard = top log2(n_shards) bits of
+    xxh64(key, seed), the sharded build's routing)."""
+    if n_shards < 1 or n_shards & (n_shards - 1):
+        raise ValueError("n_shards must be a power of two")
+    lib = kernel()
+    if lib is None:
+        return shard_counts_numpy(values, seed, n_shards)
+    keys = _keys_u64(values)
+    counts = np.zeros(n_shards, dtype=np.int64)
+    lib.pbf_shard_counts(keys, keys.size, seed, n_shards.bit_length() - 1,
+                         counts)
+    return counts
 
 
 @register(1)
@@ -114,35 +269,18 @@ class BlockedBloomFilter(Sketch):
         return bloom_positions(values, self.size2, self.nb_hash, self.seed,
                                self.block_bits)
 
-    # chunk bulk ops so the k-wide position matrix stays cache-sized no
-    # matter how many values one Arrow batch flattens to (a 65k-row batch of
-    # 54-token arrays is 3.5M values -> 28M positions -> ~0.7 GB transients
-    # without chunking; measured ~2x slower)
-    _CHUNK = 1 << 19
-
     # -- build -------------------------------------------------------------------
     def insert_bulk(self, values: np.ndarray) -> None:
-        values = np.asarray(values)
-        for lo in range(0, values.size, self._CHUNK):
-            chunk = values[lo:lo + self._CHUNK]
-            scatter_or_bits(self._words, self._positions(chunk))
+        insert_slots(self._words.reshape(1, -1), _ONE_SLOT, values,
+                     self.size2, self.nb_hash, self.seed, self.block_bits)
 
     # -- probe --------------------------------------------------------------------
     def contains_bulk(self, values: np.ndarray) -> np.ndarray:
         """Order-preserving bulk probe (reference contract:
         ``src/bloom_filter.hpp:55-58``): result[i] corresponds to values[i]."""
-        values = np.asarray(values)
-        if values.size == 0:
-            return np.zeros(0, dtype=bool)
-        out = np.empty(values.size, dtype=bool)
-        for lo in range(0, values.size, self._CHUNK):
-            chunk = values[lo:lo + self._CHUNK]
-            pos = self._positions(chunk)
-            words = (pos >> np.uint64(6)).astype(np.int64)
-            bits = np.uint64(1) << (pos & np.uint64(63))
-            hit = (self._words[words] & bits) != 0
-            out[lo:lo + chunk.size] = hit.reshape(-1, self.nb_hash).all(axis=1)
-        return out
+        return contains_slots(self._words.reshape(1, -1), _ONE_SLOT, values,
+                              self.size2, self.nb_hash, self.seed,
+                              self.block_bits)
 
     def contains(self, value) -> bool:
         return bool(self.contains_bulk(np.asarray([value]))[0])

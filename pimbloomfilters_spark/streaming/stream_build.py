@@ -742,9 +742,6 @@ def session_stream(
         .select("_u", F.col(ts_col).alias("_ts"))
     )
 
-    def _ts_out(ms: int):
-        return pd.Timestamp(ms, unit="ms")
-
     def _update(key, pdfs, state: GroupState):
         (user,) = key
         wm = state.getCurrentWatermarkMs()

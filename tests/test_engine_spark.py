@@ -395,3 +395,45 @@ def test_probe_paths_null_and_large_key_safety(spark):
            for r in probe_array_column(arr_df, bf, "toks").collect()}
     assert got[1][0] is True and got[1][1] is None and got[1][2] is True
     assert got[2] == []
+
+
+def test_ship_sketch_ignores_planted_file_at_predictable_path(spark):
+    """A wrong-content file planted where ship_sketch once looked (the
+    shared temp dir, named by the sketch's content hash) is never shipped:
+    the probe answers from the real filter."""
+    import hashlib
+    import os
+    import tempfile
+
+    from pimbloomfilters_spark.operators.probe import ship_sketch
+
+    bf = BlockedBloomFilter(size2=16, nb_hash=4)
+    keys = np.arange(1000, dtype=np.int64)
+    bf.insert_bulk(np.append(keys, int.from_bytes(os.urandom(7), "little")))
+    raw = bf.to_bytes()
+    name = f"pbf_sketch_{hashlib.blake2b(raw, digest_size=16).hexdigest()}.bin"
+    planted = os.path.join(tempfile.gettempdir(), name)
+    decoy = BlockedBloomFilter(size2=16, nb_hash=4).to_bytes()  # valid, empty
+    with open(planted, "wb") as f:
+        f.write(decoy)
+    try:
+        assert ship_sketch(spark, bf) == name
+        probed = probe_key_column(spark.range(1000), bf, "id")
+        assert probed.filter("member").count() == 1000
+        with open(planted, "rb") as f:
+            assert f.read() == decoy  # left alone, not overwritten or used
+    finally:
+        os.unlink(planted)
+
+
+def test_default_driver_memory_fits_physical_ram():
+    """The default spark.driver.memory is at most half of physical RAM and
+    at most 32g, so the local-mode JVM cannot outgrow its host."""
+    import os
+
+    from pimbloomfilters_spark.session import default_driver_memory
+
+    mem = default_driver_memory()
+    assert mem.endswith("m")
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    assert 0 < int(mem[:-1]) * 2**20 <= min(32 * 2**30, phys // 2 + 2**20)

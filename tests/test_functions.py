@@ -805,10 +805,19 @@ def test_length_buckets_hot_length_subsplit(spark):
         got_df._jdf.queryExecution(), "formatted")
     assert "_sub" in plan and "SinglePartition" not in plan
     # threshold respected: no (length, sub) group larger than ~threshold
-    # for evenly spread ids (ids here are an arithmetic progression)
-    sub = (df.filter(F.col("n_tok") == 64)
-           .count())
-    assert sub > 100  # the hot length really was hot
+    # for evenly spread ids (ids here are an arithmetic progression). The
+    # sub-groups are ceil(count / threshold) equal id ranges of the hot
+    # length, as length_buckets documents.
+    hot = df.filter(F.col("n_tok") == 64)
+    cnt, mn, mx = hot.agg(F.count("*"), F.min("doc_id"),
+                          F.max("doc_id")).first()
+    assert cnt > 100  # the hot length really was hot
+    step = -(-(mx - mn + 1) // -(-cnt // 100))
+    sizes = [r[0] for r in hot.groupBy(
+        ((F.col("doc_id") - mn) / step).cast("long")).count()
+        .select("count").collect()]
+    assert len(sizes) == -(-cnt // 100)
+    assert max(sizes) <= 110, sizes
 
 
 def test_segment_repetition_random_reference(spark):

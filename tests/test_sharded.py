@@ -15,6 +15,11 @@ from pimbloomfilters_spark.operators.sharded import (
     probe_bloom_distributed,
 )
 from pimbloomfilters_spark.sketches import make_sketch
+from pimbloomfilters_spark.sketches.bloom import (
+    bloom_positions,
+    contains_slots_numpy,
+    scatter_or_bits,
+)
 
 CFG = dict(size2=20, nb_hash=8)
 
@@ -26,12 +31,21 @@ def keys_df(spark):
     return df
 
 
-def test_sharded_equals_plain_build(spark, keys_df):
+@pytest.mark.parametrize("n_shards,n_partitions", [
+    (16, None), (1, None), (2, 1), (2, 3), (16, 5), (64, None), (64, 7)])
+def test_sharded_equals_plain_build(spark, keys_df, n_shards, n_partitions):
     plain, _ = build_sketch(
         keys_df, "id", functools.partial(make_sketch, "bloom", **CFG)
     )
-    sharded = build_bloom_sharded(keys_df, "id", n_shards=16, **CFG)
+    sharded = build_bloom_sharded(keys_df, "id", n_shards=n_shards,
+                                  n_partitions=n_partitions, **CFG)
     assert sharded.payload() == plain.payload()
+    # and both equal the numpy oracle, reached directly
+    want = np.zeros((1 << CFG["size2"]) // 64, dtype=np.uint64)
+    scatter_or_bits(want, bloom_positions(
+        np.arange(50_000, dtype=np.int64), CFG["size2"], CFG["nb_hash"], 42,
+        4096))
+    assert sharded._words.tobytes() == want.tobytes()
 
 
 def test_sharded_array_column(spark):
@@ -54,6 +68,11 @@ def test_distributed_probe_matches_broadcast(spark, keys_df):
     d = {r["id"]: r["member"] for r in dist.collect()}
     b = {r["id"]: r["member"] for r in bcast.collect()}
     assert d == b
+    ids = np.arange(60_000, dtype=np.int64)
+    oracle = contains_slots_numpy(bf._words.reshape(1, -1),
+                                  np.zeros(1, np.int32), ids, CFG["size2"],
+                                  CFG["nb_hash"], 42, 4096)
+    assert [d[i] for i in range(60_000)] == oracle.tolist()
     assert all(d[i] for i in range(0, 50_000, 997))  # no FN spot-check
 
 
