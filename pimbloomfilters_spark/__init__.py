@@ -22,4 +22,8 @@ Everything here derives from public knowledge only: the Apache Spark API, the
 reference repo's observable behavior, and published sketch papers.
 """
 
-__version__ = "0.1.0"
+__version__ = "0.4.0"
+
+from ._worker import install_zip_cache_guard
+
+install_zip_cache_guard()

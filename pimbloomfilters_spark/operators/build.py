@@ -98,12 +98,11 @@ def collect_rows(df: DataFrame) -> list:
     bytes through per-row JVM->Python pickling, which measured ~2-5x slower
     than the Arrow stream at 64 x 2 MiB partials (guide §6: Arrow for driver
     transfers). Returns dict-like rows (plain dicts), which is all the merge
-    folds access."""
-    try:
-        tbl = df.toArrow()
-    except Exception:  # pragma: no cover — non-Arrow-collectable schema
+    folds access. Runs exactly one job: a failed job raises its own error
+    and is not re-run."""
+    if not hasattr(df, "toArrow"):  # pragma: no cover — pyspark < 4.0
         return df.collect()
-    return tbl.to_pylist()
+    return df.toArrow().to_pylist()
 
 
 def merge_partial_rows(rows) -> tuple[Sketch, dict]:

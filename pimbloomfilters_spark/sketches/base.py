@@ -99,14 +99,28 @@ class Sketch(ABC):
 
 
 def sketch_from_bytes(raw: bytes) -> Sketch:
+    """Restore a sketch from ``to_bytes`` output. Corrupt or foreign bytes
+    raise ValueError naming the kind (when the envelope gives one) and the
+    reason."""
+    if len(raw) < _ENVELOPE.size:
+        raise ValueError(
+            f"sketch bytes too short: {len(raw)} < {_ENVELOPE.size}-byte envelope")
     magic, version, code, hdrlen = _ENVELOPE.unpack_from(raw, 0)
     if magic != _MAGIC:
         raise ValueError("bad sketch magic")
     if version != _VERSION:
         raise ValueError(f"unsupported sketch version {version}")
+    cls = _BY_CODE.get(code)
+    if cls is None:
+        raise ValueError(f"unknown sketch kind code {code}")
     off = _ENVELOPE.size
-    cfg = json.loads(raw[off : off + hdrlen].decode())
-    cls = _BY_CODE[code]
-    sk = cls._from_config(cfg)
-    sk._load_payload(raw[off + hdrlen :])
+    try:
+        if off + hdrlen > len(raw):
+            raise ValueError(f"config header needs {hdrlen} bytes, "
+                             f"{len(raw) - off} left")
+        cfg = json.loads(raw[off : off + hdrlen].decode())
+        sk = cls._from_config(cfg)
+        sk._load_payload(raw[off + hdrlen :])
+    except (ValueError, TypeError) as e:
+        raise ValueError(f"corrupt {cls.kind} sketch: {e}") from e
     return sk

@@ -101,10 +101,10 @@ class CountSketch(Sketch):
         return np.int64(self.total).tobytes() + self._table.tobytes()
 
     def _load_payload(self, raw: bytes) -> None:
+        if len(raw) != 8 + 8 * self.depth * self.width:
+            raise ValueError("payload size mismatch for countsketch geometry")
         self.total = int(np.frombuffer(raw[:8], dtype=np.int64)[0])
         arr = np.frombuffer(raw[8:], dtype=np.int64)
-        if arr.size != self.depth * self.width:
-            raise ValueError("payload size mismatch for countsketch geometry")
         self._table = arr.reshape(self.depth, self.width).copy()
 
     @classmethod

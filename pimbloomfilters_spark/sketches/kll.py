@@ -139,18 +139,28 @@ class KLLSketch(Sketch):
         return b"".join(parts)
 
     def _load_payload(self, raw: bytes) -> None:
-        hdr = np.frombuffer(raw[:16], dtype=np.int64)
-        self.n = int(hdr[0])
-        n_levels = int(hdr[1])
+        if len(raw) < 16:
+            raise ValueError(f"payload of {len(raw)} bytes has no kll header")
+        n, n_levels = (int(x) for x in np.frombuffer(raw, dtype=np.int64, count=2))
         off = 16
-        self._levels, self._parity = [], []
-        for _ in range(n_levels):
-            sz, par = np.frombuffer(raw[off:off + 16], dtype=np.int64)
+        levels, parity = [], []
+        for h in range(n_levels):
+            if off + 16 > len(raw):
+                raise ValueError(f"payload ends before level {h} of {n_levels}")
+            sz, par = (int(x) for x in np.frombuffer(raw, dtype=np.int64,
+                                                     count=2, offset=off))
             off += 16
-            lvl = np.frombuffer(raw[off:off + 8 * int(sz)], dtype=np.float64).copy()
-            off += 8 * int(sz)
-            self._levels.append(lvl)
-            self._parity.append(int(par))
+            if sz < 0 or off + 8 * sz > len(raw):
+                raise ValueError(f"level {h} claims {sz} items, "
+                                 f"{(len(raw) - off) // 8} left")
+            levels.append(np.frombuffer(raw, dtype=np.float64, count=sz,
+                                        offset=off).copy())
+            parity.append(par)
+            off += 8 * sz
+        if off != len(raw):
+            raise ValueError(f"{len(raw) - off} trailing bytes after "
+                             f"{n_levels} levels")
+        self.n, self._levels, self._parity = n, levels, parity
         if not self._levels:
             self._levels = [np.empty(0, dtype=np.float64)]
             self._parity = [0]

@@ -95,9 +95,13 @@ class MisraGries(Sketch):
                 + keys[order].tobytes() + vals[order].tobytes())
 
     def _load_payload(self, raw: bytes) -> None:
-        hdr = np.frombuffer(raw[:16], dtype=np.int64)
-        self.n = int(hdr[0])
-        m = int(hdr[1])
+        if len(raw) < 16:
+            raise ValueError(f"payload of {len(raw)} bytes has no mg header")
+        n, m = (int(x) for x in np.frombuffer(raw, dtype=np.int64, count=2))
+        if m < 0 or len(raw) != 16 + 16 * m:
+            raise ValueError(f"{m} counters need {16 + 16 * m} payload bytes, "
+                             f"got {len(raw)}")
+        self.n = n
         keys = np.frombuffer(raw[16:16 + 8 * m], dtype=np.int64)
         vals = np.frombuffer(raw[16 + 8 * m:16 + 16 * m], dtype=np.int64)
         self._counts = dict(zip(keys.tolist(), vals.tolist()))

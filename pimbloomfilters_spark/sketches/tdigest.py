@@ -141,10 +141,16 @@ class TDigest(Sketch):
         )
 
     def _load_payload(self, raw: bytes) -> None:
-        self.n = int(np.frombuffer(raw[:8], dtype=np.int64)[0])
-        k = int(np.frombuffer(raw[8:16], dtype=np.int64)[0])
-        self._means = np.frombuffer(raw[16:16 + 8 * k], dtype=np.float64).copy()
-        self._weights = np.frombuffer(raw[16 + 8 * k:16 + 16 * k], dtype=np.int64).copy()
+        if len(raw) < 16:
+            raise ValueError(f"payload of {len(raw)} bytes has no tdigest header")
+        n, k = (int(x) for x in np.frombuffer(raw, dtype=np.int64, count=2))
+        if k < 0 or len(raw) != 16 + 16 * k:
+            raise ValueError(f"{k} centroids need {16 + 16 * k} payload bytes, "
+                             f"got {len(raw)}")
+        self.n = n
+        self._means = np.frombuffer(raw, dtype=np.float64, count=k, offset=16).copy()
+        self._weights = np.frombuffer(raw, dtype=np.int64, count=k,
+                                      offset=16 + 8 * k).copy()
         self._buf, self._buf_n = [], 0
 
     @classmethod

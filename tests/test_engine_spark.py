@@ -437,3 +437,22 @@ def test_default_driver_memory_fits_physical_ram():
     assert mem.endswith("m")
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
     assert 0 < int(mem[:-1]) * 2**20 <= min(32 * 2**30, phys // 2 + 2**20)
+
+
+def test_failing_build_raises_after_one_job(spark):
+    """A build whose sketch factory raises surfaces that error from the one
+    job it ran; the partials are never re-collected through a second job."""
+    import uuid
+
+    def boom():
+        raise RuntimeError("factory boom")
+
+    sc = spark.sparkContext
+    group = f"pbf-failing-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "failing build")
+    try:
+        with pytest.raises(Exception, match="factory boom"):
+            build_sketch(spark.range(100, numPartitions=2), "id", boom)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
