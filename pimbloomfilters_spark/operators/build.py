@@ -35,6 +35,7 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 
 from ..sketches import Sketch, sketch_from_bytes
+from ..sketches.bloom import popcount
 
 PARTIAL_SCHEMA = (
     "partition_id int, sketch binary, n_rows long, n_values long, build_ms double"
@@ -223,26 +224,25 @@ def weight_distributed(partials_or_shards: DataFrame,
     reduces, host sums per rank: ``src/dpu/bloom_filters_dpu.cpp:146-166``,
     ``src/pim_rankset.cpp:276-290``). Valid on DISJOINT partials (sharded
     build rows); on overlapping partials the per-partial popcounts
-    over-count shared bits — merge first in that case."""
-    import pyarrow as pa
-    from pyspark.sql import functions as F
+    over-count shared bits — merge first in that case. One job of one
+    stage: the per-partition totals are collected and summed on the
+    driver."""
 
     def _pop(batches):
         total = 0
-        lut = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint32)
         for b in batches:
             for blob in b.column(0):
-                raw = np.frombuffer(blob.as_py(), dtype=np.uint8)
-                total += int(lut[raw].sum(dtype=np.int64))
+                raw = blob.as_py()
+                cut = len(raw) & ~7  # whole words; the tail bytes by int
+                total += popcount(np.frombuffer(raw, np.uint64, cut // 8))
+                total += int.from_bytes(raw[cut:], "little").bit_count()
         yield pa.RecordBatch.from_arrays(
             [pa.array([total], type=pa.int64())], names=["w"]
         )
 
-    out = (
-        partials_or_shards.select(sketch_col)
-        .mapInArrow(_pop, "w long").agg(F.sum("w")).collect()[0][0]
-    )
-    return int(out or 0)
+    rows = collect_rows(
+        partials_or_shards.select(sketch_col).mapInArrow(_pop, "w long"))
+    return sum(r["w"] for r in rows)
 
 
 def build_sketch(

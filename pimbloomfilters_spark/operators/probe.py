@@ -31,6 +31,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..sketches import Sketch, sketch_from_bytes
+from .build import collect_rows
 
 _WORKER_CACHE: dict[str, Sketch] = {}
 # (applicationId, name) pairs already registered via addFile — a sketch is
@@ -199,9 +200,9 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
     booleans never cross the Python/JVM boundary — use for counts/FPR at
     scale (reference analogue: the DPU packs lookup results 64/word before
     transfer, ``src/dpu/bloom_filters_dpu.cpp:224-246``; here we go further
-    and ship only the partial sums)."""
+    and ship only the partial sums). One job of one stage: the per-partition
+    rows are collected and summed on the driver, with no exchange."""
     import pyarrow as pa
-    from pyspark.sql import functions as F
 
     name = ship_sketch(df.sparkSession, sketch)
 
@@ -222,11 +223,9 @@ def probe_count(df: DataFrame, sketch: Sketch, key_col: str) -> tuple[int, int]:
             names=["n", "hits"],
         )
 
-    row = (
-        df.select(key_col).mapInArrow(_count, "n long, hits long")
-        .agg(F.sum("n"), F.sum("hits")).collect()[0]
-    )
-    return int(row[0] or 0), int(row[1] or 0)
+    rows = collect_rows(
+        df.select(key_col).mapInArrow(_count, "n long, hits long"))
+    return sum(r["n"] for r in rows), sum(r["hits"] for r in rows)
 
 
 def cms_count_column(df: DataFrame, sketch: Sketch, key_col: str,

@@ -1,4 +1,5 @@
-"""Loader for the fused Bloom kernel (``bloom_kernel.c``).
+"""Loader for the fused Bloom kernel (``bloom_kernel.c``): insert, probe,
+shard counts and popcount.
 
 The kernel is compiled on first use, never at import, with
 ``cc -O3 -fPIC -shared`` and no ``-march=native`` (executors may run on
@@ -123,6 +124,8 @@ def _load() -> ctypes.CDLL:
     lib.pbf_contains.restype = c_i64
     lib.pbf_shard_counts.argtypes = [u64, c_i64, ctypes.c_uint64, c_int, i64]
     lib.pbf_shard_counts.restype = None
+    lib.pbf_popcount.argtypes = [u64, c_i64]
+    lib.pbf_popcount.restype = c_i64
     return lib
 
 

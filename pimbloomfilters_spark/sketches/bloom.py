@@ -26,7 +26,8 @@ by ``_native``): per key it hashes, finds the block and sets or tests the k
 bits in one pass, with no position matrix. The numpy functions here
 (``bloom_positions`` + ``scatter_or_bits`` and the ``*_numpy`` slot paths) are
 the test oracle and the fallback on hosts where the kernel cannot be built;
-the two are byte-identical.
+the two are byte-identical. The kernel also counts set bits (``popcount``),
+which serves ``get_weight`` and the dense/sparse choice of ``payload``.
 
 Both paths write a 2-D ``(n_slots, slot_words)`` word buffer through a
 shard->slot table: a plain filter is one slot holding every shard, a
@@ -233,6 +234,32 @@ def shard_counts(values, seed: int, n_shards: int) -> np.ndarray:
     return counts
 
 
+_POPCNT16: np.ndarray | None = None  # lazy 64 KiB LUT of the numpy < 2 path
+
+
+def popcount_numpy(words: np.ndarray) -> int:
+    """numpy oracle/fallback of ``popcount``: ``np.bitwise_count`` on
+    numpy >= 2, else a 16-bit LUT. numpy 1.x (``numpy>=1.24`` is allowed)
+    takes the LUT branch, whose uint8 temporary is half the words' size
+    where ``np.unpackbits`` would need eight times it."""
+    if hasattr(np, "bitwise_count"):
+        return int(np.bitwise_count(words).sum())
+    global _POPCNT16
+    if _POPCNT16 is None:
+        _POPCNT16 = np.array([bin(i).count("1") for i in range(1 << 16)],
+                             dtype=np.uint8)
+    return int(_POPCNT16[words.view(np.uint16)].sum(dtype=np.int64))
+
+
+def popcount(words: np.ndarray) -> int:
+    """Set bits in a uint64 word array: the native kernel's count, else
+    ``popcount_numpy``."""
+    lib = kernel()
+    if lib is None:
+        return popcount_numpy(words)
+    return int(lib.pbf_popcount(words.reshape(-1), words.size))
+
+
 @register(1)
 class BlockedBloomFilter(Sketch):
     kind = "bloom"
@@ -286,21 +313,11 @@ class BlockedBloomFilter(Sketch):
         return bool(self.contains_bulk(np.asarray([value]))[0])
 
     # -- aggregate ------------------------------------------------------------------
-    _POPCNT16 = None  # lazy 64KB LUT shared across instances
-
     def get_weight(self) -> int:
         """Popcount of set bits (reference ``get_weight``,
         ``src/bloom_filter.hpp:62``; partial+final sum on DPU,
-        ``src/dpu/bloom_filters_dpu.cpp:146-166``). 16-bit-LUT popcount: no
-        8x temporary blowup like unpackbits on multi-GB filters."""
-        if hasattr(np, "bitwise_count"):
-            return int(np.bitwise_count(self._words).sum())
-        if BlockedBloomFilter._POPCNT16 is None:
-            BlockedBloomFilter._POPCNT16 = np.array(
-                [bin(i).count("1") for i in range(1 << 16)], dtype=np.uint8
-            )
-        lut = BlockedBloomFilter._POPCNT16
-        return int(lut[self._words.view(np.uint16)].sum(dtype=np.int64))
+        ``src/dpu/bloom_filters_dpu.cpp:146-166``)."""
+        return popcount(self._words)
 
     # -- merge / set algebra ------------------------------------------------------------
     def merge(self, other: "BlockedBloomFilter") -> "BlockedBloomFilter":
@@ -354,15 +371,12 @@ class BlockedBloomFilter(Sketch):
     # 32-partition build over small inputs moved 64 MB of mostly-zero
     # bitmaps to the driver before this (same motivation as the HLL sparse
     # form above; guide §2.3, shuffle/collect fewer bytes).
+    # The choice costs one popcount; the nonzero words are only gathered
+    # once the sparse form has won.
     def payload(self) -> bytes:
-        wi = np.flatnonzero(self._words)
-        if hasattr(np, "bitwise_count"):
-            nbits = int(np.bitwise_count(self._words[wi]).sum())
-        else:  # pragma: no cover — numpy < 2
-            nbits = int(np.unpackbits(
-                self._words[wi].view(np.uint8)).sum(dtype=np.int64))
         width = 4 if self.size2 <= 32 else 8
-        if 1 + width * nbits < self.m_bits // 8:
+        if 1 + width * self.get_weight() < self.m_bits // 8:
+            wi = np.flatnonzero(self._words)
             bits = np.unpackbits(
                 self._words[wi].view(np.uint8),
                 bitorder="little").reshape(-1, 64)

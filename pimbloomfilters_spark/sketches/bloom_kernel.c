@@ -9,7 +9,10 @@
  * holding that shard's bit range, or is < 0 when the caller gave it none.
  * Keys of a shard without a row are skipped and counted; the return value
  * is that count, so nothing is ever written outside the buffer. The caller
- * checks slot_of against n_slots and slot_words against the geometry. */
+ * checks slot_of against n_slots and slot_words against the geometry.
+ *
+ * pbf_popcount counts the set bits of a word array: the filter's weight,
+ * which also picks the dense or sparse wire form. */
 #include <stdint.h>
 
 static inline uint64_t rotl(uint64_t x, int r) { return (x << r) | (x >> (64 - r)); }
@@ -74,4 +77,11 @@ void pbf_shard_counts(const uint64_t *keys, int64_t n, uint64_t seed,
                       int shard_bits, int64_t *counts) {
     for (int64_t j = 0; j < n; j++)
         counts[shard_bits ? xxh64_u64(keys[j], seed) >> (64 - shard_bits) : 0]++;
+}
+
+/* set bits in words[0..n) */
+int64_t pbf_popcount(const uint64_t *words, int64_t n) {
+    int64_t c = 0;
+    for (int64_t j = 0; j < n; j++) c += __builtin_popcountll(words[j]);
+    return c;
 }

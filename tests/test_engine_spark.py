@@ -456,3 +456,48 @@ def test_failing_build_raises_after_one_job(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def _jobs_and_stages(spark, fn):
+    """(fn(), number of jobs, stages per job) for the Spark work fn runs."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pbf-job-shape-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job shape")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    return out, len(jobs), [len(tracker.getJobInfo(j).stageIds) for j in jobs]
+
+
+def test_probe_count_and_weight_run_one_single_stage_job(spark):
+    """probe_count and weight_distributed collect their per-partition sums
+    in one job of one stage (no exchange, no final aggregate), and give 0
+    on an empty DataFrame."""
+    from pimbloomfilters_spark.operators.build import weight_distributed
+    from pimbloomfilters_spark.operators.probe import probe_count
+
+    bf = BlockedBloomFilter(size2=16, nb_hash=4)
+    bf.insert_bulk(np.arange(0, 2000, 2, dtype=np.int64))
+    probes = spark.range(0, 2000, numPartitions=4)
+    (n, hits), n_jobs, stages = _jobs_and_stages(
+        spark, lambda: probe_count(probes, bf, "id"))
+    assert (n_jobs, stages) == (1, [1])
+    want = bf.contains_bulk(np.arange(2000, dtype=np.int64))
+    assert n == 2000 and hits == int(want.sum()) >= 1000
+
+    blobs = [bf.payload(), b"\xff\x01\x80", bytes(24), b""]
+    shards = spark.createDataFrame([(b,) for b in blobs], "sketch binary")
+    w, n_jobs, stages = _jobs_and_stages(
+        spark, lambda: weight_distributed(shards))
+    assert (n_jobs, stages) == (1, [1])
+    assert w == bf.get_weight() + 10
+
+    assert probe_count(spark.createDataFrame([], "id long"), bf, "id") == (0, 0)
+    assert probe_count(spark.range(0, 0, numPartitions=3), bf, "id") == (0, 0)
+    assert weight_distributed(
+        spark.createDataFrame([], "sketch binary")) == 0

@@ -22,6 +22,8 @@ from pimbloomfilters_spark.sketches.bloom import (
     contains_slots_numpy,
     insert_slots,
     insert_slots_numpy,
+    popcount,
+    popcount_numpy,
     scatter_or_bits,
     shard_counts,
     shard_counts_numpy,
@@ -99,6 +101,22 @@ def test_slot_layout_matches_plain_filter(n_shards, seed):
     assert shard_counts(keys, seed, n_shards).sum() == keys.size
 
 
+@needs_native
+def test_popcount_matches_unpackbits():
+    """pbf_popcount against np.unpackbits on all-zero, all-ones, random and
+    odd-length word arrays, and popcount_numpy on the same words."""
+    lib = _native.kernel()
+    rng = np.random.default_rng(7)
+    cases = [np.zeros(1024, np.uint64), np.full(1024, ~np.uint64(0)),
+             np.zeros(0, np.uint64)]
+    cases += [rng.integers(0, 2**64, n, dtype=np.uint64)
+              for n in (1, 3, 7, 1001, 1 << 16)]
+    for words in cases:
+        want = int(np.unpackbits(words.view(np.uint8)).sum())
+        assert lib.pbf_popcount(words, words.size) == want
+        assert popcount(words) == popcount_numpy(words) == want
+
+
 @pytest.mark.parametrize("insert", [insert_slots, insert_slots_numpy])
 def test_unrouted_keys_raise_and_stay_inside_buffer(insert):
     """A key whose shard has no slot is an error, and nothing lands outside
@@ -155,11 +173,19 @@ _PROBE_SCRIPT = textwrap.dedent("""
     scatter_or_bits(want, bloom_positions(keys, 18, 7, 42, 4096))
     probes = np.arange(-50000, 50000, dtype=np.int64)
     hits = bf.contains_bulk(probes)
+    sparse = BlockedBloomFilter(18, 7)
+    sparse.insert_bulk(keys[:500])
     print(json.dumps({
         "kernel": _native.kernel_name(),
         "identical": bf._words.tobytes() == want.tobytes(),
         "no_fn": bool(hits[np.isin(probes, keys)].all()),
         "answers": hashlib.sha256(hits.tobytes()).hexdigest(),
+        "weights": [f.get_weight() for f in (bf, sparse)],
+        "unpacked": [int(np.unpackbits(f._words.view(np.uint8)).sum())
+                     for f in (bf, sparse)],
+        "wire": [hashlib.sha256(f.to_bytes()).hexdigest()
+                 for f in (bf, sparse)],
+        "forms": [f.payload()[:1] == b"S" for f in (bf, sparse)],
         "records": records}))
 """)
 
@@ -185,6 +211,8 @@ def test_no_compiler_falls_back_to_numpy_once(tmp_path):
     out = _run_probe(tmp_path, path_env=str(empty_bin))
     assert out["kernel"] == "numpy"
     assert out["identical"] and out["no_fn"]
+    assert out["weights"] == out["unpacked"]
+    assert out["forms"] == [False, True]  # one dense, one sparse filter
     warnings = _levels(out, "WARNING")
     assert len(warnings) == 1 and "no C compiler" in warnings[0], warnings
     assert _levels(out, "INFO") == ["bloom kernel: numpy"]
@@ -202,7 +230,12 @@ def test_native_process_logs_kernel_once(tmp_path):
     empty_bin = tmp_path / "bin"
     empty_bin.mkdir()
     numpy_out = _run_probe(tmp_path, path_env=str(empty_bin))
+    assert numpy_out["kernel"] == "numpy"
     assert numpy_out["answers"] == out["answers"]
+    # popcount and both wire forms agree byte for byte
+    assert out["weights"] == out["unpacked"] == numpy_out["weights"]
+    assert out["forms"] == [False, True]
+    assert numpy_out["wire"] == out["wire"]
 
 
 @needs_native

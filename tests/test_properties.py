@@ -2,6 +2,7 @@
 hold for ARBITRARY int64 key sets, not just the sequential fixtures."""
 
 import numpy as np
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -198,6 +199,67 @@ def test_hll_payload_roundtrip_any_registers(idx, rho):
     h2 = HyperLogLog(p=14)
     h2.set_data(h._regs.tobytes())
     assert np.array_equal(h2._regs, h._regs)
+
+
+def _bloom_wire_oracle(bf, positions) -> bytes:
+    """Payload by the wire rule: sparse (b'S' + sorted uint32 positions)
+    iff 1 + 4*nbits < m/8, with nbits counted by unpackbits; else the raw
+    words."""
+    nbits = int(np.unpackbits(bf._words.view(np.uint8)).sum())
+    assert nbits == positions.size
+    if 1 + 4 * nbits < bf.m_bits // 8:
+        return b"S" + np.sort(positions).astype(np.uint32).tobytes()
+    return bf._words.tobytes()
+
+
+@st.composite
+def bloom_fills(draw):
+    """(size2, set-bit positions): fills anywhere in [0, m], and fills
+    within 3 bits of the first dense fill ceil((m/8 - 1) / 4). At size2=3
+    the empty filter sits exactly on 1 + 4*nbits == m/8."""
+    size2 = draw(st.sampled_from([3, 6, 12, 16]))
+    m = 1 << size2
+    first_dense = -(-(m // 8 - 1) // 4)
+    n = draw(st.one_of(
+        st.integers(max(0, first_dense - 3), min(m, first_dense + 3)),
+        st.integers(0, m)))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    if draw(st.booleans()):  # one contiguous run of set bits
+        start = int(rng.integers(0, m - n + 1))
+        pos = np.arange(start, start + n, dtype=np.uint64)
+    else:
+        pos = rng.choice(m, n, replace=False).astype(np.uint64)
+    return size2, pos
+
+
+@pytest.mark.parametrize("popcount_path", ["native", "numpy", "numpy<2"])
+@settings(max_examples=60, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow])
+@given(fill=bloom_fills())
+def test_bloom_wire_form_matches_rule_and_roundtrips(popcount_path, fill):
+    """Bloom payload bytes follow the dense/sparse rule on both sides of
+    the threshold and round-trip, whichever popcount runs: the native
+    kernel, numpy with the kernel off, or the numpy < 2 LUT branch (reached
+    on any numpy by removing np.bitwise_count)."""
+    from pimbloomfilters_spark.sketches import _native
+    from pimbloomfilters_spark.sketches.bloom import scatter_or_bits
+
+    if popcount_path == "native" and _native.kernel() is None:
+        pytest.skip("native Bloom kernel unavailable here")
+    size2, pos = fill
+    with pytest.MonkeyPatch.context() as mp:
+        if popcount_path != "native":
+            mp.setitem(_native._STATE, "lib", None)
+        if popcount_path == "numpy<2":
+            mp.delattr(np, "bitwise_count", raising=False)
+        bf = BlockedBloomFilter(size2=size2, nb_hash=4)
+        scatter_or_bits(bf._words, pos)
+        assert bf.get_weight() == pos.size
+        assert bf.payload() == _bloom_wire_oracle(bf, pos)
+        raw = bf.to_bytes()
+        back = sketch_from_bytes(raw)
+        assert back._words.tobytes() == bf._words.tobytes()
+        assert back.to_bytes() == raw
 
 
 @settings(max_examples=60, deadline=None,
